@@ -3325,9 +3325,9 @@ def q_sim_topk_ivfpq_res(spark: SparkSession, sf_dir: str) -> DataFrame:
       and the 16-sample residual codebook mixes residuals taken
       against different centroids — strictly worse conditioning.
     - clustered corpus (the repo's closed-form fixture, 5 000 vectors,
-      16 cells, 1-probe; tools/residual_pq_eval.py): residual wins at
-      every useful depth — depth 64: 0.22 vs 0.12, 128: 0.56 vs 0.42,
-      256: 0.84 vs 0.80. In-cell raw subvectors all quantize to their
+      16 cells, 1-probe; `git show 5b503c1:tools/residual_pq_eval.py`):
+      residual wins at every useful depth — depth 64: 0.22 vs 0.12,
+      128: 0.56 vs 0.42, 256: 0.84 vs 0.80. In-cell raw subvectors all quantize to their
       cluster's codeword (ADC cannot discriminate within a cell);
       residuals ARE the within-cell variation, so coding them is the
       only way the fine stage carries information — the reason FAISS

@@ -827,7 +827,7 @@ PIN_DIR = "_PINS"
 PIN_TTL_SEC = 3600.0
 
 
-def _pin_ttl() -> float:
+def _reader_pin_ttl() -> float:
     try:
         return float(os.environ.get("SPARK_GRAFT_PIN_TTL", ""))
     except ValueError:
@@ -851,7 +851,7 @@ def _live_pinned_dirs(root: str) -> set[str]:
         try:
             with open(path) as fh:
                 rec = json.load(fh)
-            if now - float(rec["ts"]) > _pin_ttl():
+            if now - float(rec["ts"]) > _reader_pin_ttl():
                 # Re-read immediately before the unlink: refresh()
                 # os.replace()s the pin with a fresh ts, and sweeping
                 # a pin that was re-stamped between our read and the
@@ -859,7 +859,7 @@ def _live_pinned_dirs(root: str) -> set[str]:
                 try:
                     with open(path) as fh:
                         rec2 = json.load(fh)
-                    if time.time() - float(rec2["ts"]) <= _pin_ttl():
+                    if time.time() - float(rec2["ts"]) <= _reader_pin_ttl():
                         out.update(rec2["dirs"])
                         continue
                 except (OSError, ValueError, KeyError, TypeError):

@@ -27,6 +27,10 @@ from dist_mapreduce_spark.functions.hashing import (
     md5_prefix_long_duckdb_sql,
     md5_prefix_long_spark_sql,
 )
+from dist_mapreduce_spark.plans.llm_pipeline import (
+    _duck_minhash_oracle,
+    propagate_min_labels,
+)
 from dist_mapreduce_spark.plans.registry import query
 from dist_mapreduce_spark.sources.tables import load_table
 
@@ -463,8 +467,6 @@ def q_kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------------- connected components
 
-CC_MAX_ITERS = 20
-
 
 @query(
     "graph_components",
@@ -484,16 +486,12 @@ def q_graph_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     state them in closed form, while the Spark side runs the general
     algorithm with no knowledge of that structure.
 
-    Per round: join labels into the symmetric edge list (one shuffle on
-    node id), union with self-labels, min-aggregate — converged when
-    sum(label) stops falling (it is monotone non-increasing).
-    localCheckpoint truncates lineage each round so the plan does not
-    grow with iterations. Tree diameter is O(log n) — ~9 rounds at
-    SF 1, ~15 at SF 100; CC_MAX_ITERS=20 covers up to ~2^20 suppliers
-    per nation and the loop RAISES if it ever exits unconverged
-    (silently returning partial labels would be wrong answers). At
-    100 TB scale the same loop runs with the edge list pre-partitioned
-    by src and AQE handling skew."""
+    The fixpoint is propagate_min_labels — the same frontier +
+    pointer-doubling loop dedup_cluster runs, so convergence takes
+    O(log diameter) rounds and an unconverged loop raises. Only
+    edge-incident nodes enter the loop; every supplier is left-joined
+    onto its labels afterwards, so a node with no edges (a nation's
+    only supplier) labels itself."""
     s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     rk_w = F.row_number().over(
         Window.partitionBy("s_nationkey").orderBy("s_suppkey")
@@ -507,87 +505,13 @@ def q_graph_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         parent,
         (F.col("c.s_nationkey") == F.col("p.s_nationkey"))
         & (F.col("p.rk") == F.expr("c.rk DIV 2")),
-    ).select(F.col("c.node").alias("src"), F.col("p.node").alias("dst"))
-    # Lazy checkpoint (round 16): the round-0 frontier count is the
-    # first action, so one job materializes edges and init labels.
-    edges_sym = edges.union(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint(eager=False)
-
-    # Round-0 fusion (round 15, same rewrite as propagate_min_labels):
-    # with identity initial labels, the first round reduces to
-    # label0(v) = min({v} ∪ neighbors(v)) — one aggregation + one join
-    # instead of a full propagation round; singleton nodes (no edges)
-    # fall through the left join and keep themselves (least() skips the
-    # NULL). Identical labeling after round 0, identical fixpoint.
-    # FRONTIER (delta) propagation (round 16, guide §2.3, the same
-    # rewrite as propagate_min_labels): `chg` marks the nodes whose
-    # label changed this round; only those message neighbors next round
-    # (a label that did not change was already delivered the round
-    # after it was acquired, and min-folds are monotone, so re-sending
-    # it can never change anything). Per round the edge join touches
-    # frontier-incident edges only — instead of ALL edges × ALL labels,
-    # the dominant shuffle term — while the min-fold keeps the one
-    # union-aggregate exchange of the full algorithm (same stage count
-    # per round; `old` is the unique labels-side value per node, so the
-    # frontier flag falls out of the same aggregation). Per-round
-    # labelings, round count, and the fixpoint are identical;
-    # singletons keep mn NULL → chg NULL → never frontier members.
-    nbr_min = edges_sym.groupBy("src").agg(F.min("dst").alias("mn"))
-    labels = (
+    ).select(F.col("c.node").alias("doc_a"), F.col("p.node").alias("doc_b"))
+    labels = propagate_min_labels(edges)
+    return (
         ranked.select("node")
-        .join(nbr_min, F.col("node") == nbr_min["src"], "left")
-        .select(
-            "node",
-            F.least(F.col("node"), F.col("mn")).alias("label"),
-            (F.col("mn") < F.col("node")).alias("chg"),
-        )
-        .localCheckpoint(eager=False)
+        .join(labels, "node", "left")
+        .select("node", F.coalesce("label", "node").alias("component"))
     )
-    # Lazy checkpoint: the frontier-count action below materializes the
-    # round's label blocks AND returns the convergence test in ONE job
-    # (labels are monotone non-increasing, so `frontier empty` ⇔ the
-    # old sum(label)-unchanged test).
-    n_changed = labels.filter("chg").count()
-    converged = n_changed == 0
-    for _ in range(1, CC_MAX_ITERS):
-        if converged:
-            break
-        delta = labels.filter("chg").select("node", "label")
-        msgs = edges_sym.join(delta, edges_sym["src"] == delta["node"]).select(
-            F.col("dst").alias("node"), "label"
-        )
-        folded = labels.select(
-            "node", "label", F.lit(0).alias("src")
-        ).union(msgs.select("node", "label", F.lit(1).alias("src")))
-        labels = (
-            folded.groupBy("node")
-            .agg(
-                F.min("label").alias("mn"),
-                F.min(F.when(F.col("src") == 0, F.col("label"))).alias(
-                    "old"
-                ),
-            )
-            .select(
-                "node",
-                F.col("mn").alias("label"),
-                (F.col("mn") < F.col("old")).alias("chg"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        n_changed = labels.filter("chg").count()
-        converged = n_changed == 0
-    if not converged:
-        # Min-label propagation moves a root's label one hop per round,
-        # so convergence needs ~diameter rounds. Returning silently
-        # here would hand back WRONG components; fail loudly so the
-        # caller raises CC_MAX_ITERS (or pre-contracts the graph)
-        # instead of trusting unconverged labels.
-        raise RuntimeError(
-            f"graph_components did not converge in {CC_MAX_ITERS} rounds;"
-            " raise CC_MAX_ITERS for graphs with larger diameter"
-        )
-    return labels.select("node", F.col("label").alias("component"))
 
 
 # Temperature-based language rebalancing (the multilingual-corpus
@@ -795,10 +719,6 @@ def q_sample_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ------------------------------------------------- triangle counting
-
-from dist_mapreduce_spark.plans.llm_pipeline import (  # noqa: E402
-    _duck_minhash_oracle,
-)
 
 
 @query(

@@ -1709,12 +1709,13 @@ def q_knn_graph_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sampled members, rescores exactly, merges with the previous
     graph (monotone) and re-tops per source; KNN_ITERS = 3 iterations
     under the full oracle. Measured trajectory on sf0.1
-    (tools/knn_trajectory.py, published in docs/SCALE.md): seed 0.352
-    → 0.352/0.356/0.364 over iterations 1-3, FIXPOINT 0.376 at
-    iteration 5, exactly flat through 10 — the isotropic ceiling is a
-    fixpoint of the sampled iteration, converging slightly below the
-    unsampled single-iteration 0.388 because the sample revisits only
-    3 of ~10 symmetrized neighbors (the honest sampling trade).
+    (`git show 5b503c1:tools/knn_trajectory.py`, published in
+    docs/SCALE.md): seed 0.352 → 0.352/0.356/0.364 over iterations 1-3,
+    FIXPOINT 0.376 at iteration 5, exactly flat through 10 — the
+    isotropic ceiling is a fixpoint of the sampled iteration, converging
+    slightly below the unsampled single-iteration 0.388 because the
+    sample revisits only 3 of ~10 symmetrized neighbors (the honest
+    sampling trade).
 
     Scale shape: sampling caps the per-pivot expansion at KNN_SAMPLE²
     candidate pairs (vs (2K)² unsampled — a 4-11× pair reduction at

@@ -1157,7 +1157,11 @@ def trained_quantizer(
     # fingerprint of the UNDERIVED twin (a localCheckpoint has no
     # inputFiles and a fresh semanticHash, so fingerprinting it would
     # defeat the cross-query memo); `materialized=True` says the caller
-    # already checkpointed the frame.
+    # already checkpointed the frame. A key is only trusted for such a
+    # checkpointed twin: on a live frame the fingerprint is free, and a
+    # wrong key would poison the memo for every later caller.
+    if key is not None and not materialized:
+        raise ValueError("trained_quantizer: key requires materialized=True")
     if key is None:
         key = _frame_fingerprint(emb)
     hit = _TRAINED_MEMO.get(key)

@@ -35,23 +35,59 @@ def test_kmeans_deterministic_and_total(spark):
     assert all(r[3] > 0 for r in run1)
 
 
-def test_graph_components_match_nations(spark):
+def _write_supplier(tmp_path, name, keys_by_nation):
+    """A tmp-dir sf directory holding only a ``supplier`` table with
+    the two columns graph_components reads."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rows = [(k, n) for n, keys in keys_by_nation.items() for k in keys]
+    sf_dir = tmp_path / name
+    sf_dir.mkdir()
+    pq.write_table(
+        pa.table(
+            {
+                "s_suppkey": pa.array([k for k, _ in rows], pa.int64()),
+                "s_nationkey": pa.array([n for _, n in rows], pa.int32()),
+            }
+        ),
+        str(sf_dir / "supplier.parquet"),
+    )
+    return str(sf_dir)
+
+
+def test_graph_components_match_nations(spark, tmp_path):
     """Label propagation must converge to the nation partition (the
-    synthetic per-nation trees are the true components)."""
+    synthetic per-nation trees are the true components) — on the
+    sf0.001 tables and on three edge cases: a nation whose only supplier
+    has no edges (it must label itself), a nation of several thousand
+    suppliers (a tree deep enough to reach the pointer-jump rounds),
+    and an empty table (zero rows)."""
+    import random
+
     from dist_mapreduce_spark.sources.tables import load_table
 
-    got = {
-        r["node"]: r["component"]
-        for r in _q("graph_components")(spark, SF).collect()
-    }
-    s = load_table(spark, SF, "supplier").select("s_suppkey", "s_nationkey")
-    rows = s.collect()
-    want_min = {}
-    for r in rows:
-        k = r["s_nationkey"]
-        want_min[k] = min(want_min.get(k, r["s_suppkey"]), r["s_suppkey"])
-    want = {r["s_suppkey"]: want_min[r["s_nationkey"]] for r in rows}
-    assert got == want
+    big = random.Random(7).sample(range(10, 100_000), 4000)
+    inputs = [
+        (SF, None),
+        (_write_supplier(tmp_path, "edge", {0: [5], 1: big, 2: [3, 9, 1]}), 3),
+        (_write_supplier(tmp_path, "empty", {}), 0),
+    ]
+    for sf_dir, n_components in inputs:
+        got = {
+            r["node"]: r["component"]
+            for r in _q("graph_components")(spark, sf_dir).collect()
+        }
+        s = load_table(spark, sf_dir, "supplier")
+        rows = s.select("s_suppkey", "s_nationkey").collect()
+        want_min = {}
+        for r in rows:
+            k = r["s_nationkey"]
+            want_min[k] = min(want_min.get(k, r["s_suppkey"]), r["s_suppkey"])
+        want = {r["s_suppkey"]: want_min[r["s_nationkey"]] for r in rows}
+        assert got == want, sf_dir
+        if n_components is not None:
+            assert len(set(got.values())) == n_components, sf_dir
 
 
 def test_sample_temperature_keeps_rarest_lang_fully(spark):

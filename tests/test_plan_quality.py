@@ -433,3 +433,29 @@ def test_substring_rewrite_first_wins_is_aggregate_not_window(spark):
     assert "Window" not in plan, plan[:3000]
     # partial_min(struct) proves the map-side combine is really there.
     assert "partial_min" in plan, plan[:3000]
+
+
+def test_dump_plans_rejects_unknown_query(monkeypatch):
+    """tools/dump_plans.py checks the requested names against the
+    registry before it starts Spark: an unknown name exits non-zero
+    with the sorted valid names instead of a KeyError mid-run."""
+    from dist_mapreduce_spark import session
+
+    spec = importlib.util.spec_from_file_location(
+        "dump_plans",
+        os.path.join(os.path.dirname(__file__), "..", "tools", "dump_plans.py"),
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+
+    def no_spark(*a, **k):
+        raise AssertionError("dump_plans started Spark for an unknown name")
+
+    monkeypatch.setattr(session, "get_spark", no_spark)
+    with pytest.raises(SystemExit) as exc:
+        mod.main([SF, "unused", "tag", "tpch_q1", "no_such_query"])
+    msg = str(exc.value.code)
+    assert "no_such_query" in msg.splitlines()[0]
+    import __spark_entry__ as e
+
+    assert msg.splitlines()[1:] == sorted(e.queries())

@@ -643,3 +643,20 @@ def test_staleness_fresh_train_memo_key_shared(spark, tmp_path):
         "retrain-path cu fingerprint created a second memo entry"
     )
     assert cent_again == S._TRAINED_MEMO[key][0]
+
+
+def test_trained_quantizer_key_requires_materialized(spark):
+    """A memo key is trusted only for a frame the caller checkpointed:
+    passing one for a live frame raises before any memo entry is read
+    or written."""
+    import pytest
+
+    from dist_mapreduce_spark.plans import similarity as S
+
+    emb = spark.createDataFrame(
+        [(0, [1.0, 0.0])], "vec_id long, embedding array<double>"
+    )
+    n_before = len(S._TRAINED_MEMO)
+    with pytest.raises(ValueError, match="materialized=True"):
+        S.trained_quantizer(emb, key=("bogus",))
+    assert len(S._TRAINED_MEMO) == n_before

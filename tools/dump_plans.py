@@ -17,14 +17,22 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def main() -> None:
-    sf_dir, outdir, tag, *names = sys.argv[1:]
+def main(argv: list[str] | None = None) -> None:
+    sf_dir, outdir, tag, *names = sys.argv[1:] if argv is None else argv
     import __spark_entry__ as e
+
+    qs = e.queries()
+    unknown = [n for n in names if n not in qs]
+    if unknown:
+        sys.exit(
+            f"unknown query name(s): {' '.join(unknown)}; valid names:\n"
+            + "\n".join(sorted(qs))
+        )
     from dist_mapreduce_spark.session import get_spark
 
     spark = get_spark("dump_plans")
     jvm = spark.sparkContext._jvm
-    qs = e.queries()
+    sql_utils = jvm.org.apache.spark.sql.api.python.PythonSQLUtils
     root = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "plans",
@@ -33,7 +41,7 @@ def main() -> None:
     os.makedirs(root, exist_ok=True)
     for name in names:
         df = qs[name](spark, sf_dir)
-        txt = jvm.PythonSQLUtils.explainString(
+        txt = sql_utils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
         path = os.path.join(root, f"{name}_{tag}.txt")
