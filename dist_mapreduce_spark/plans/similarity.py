@@ -530,7 +530,8 @@ def ivf_ranked_cells_sql(
 ) -> str:
     """Spark SQL expression: array of (−dot/|c|, cent_id) structs sorted
     by the oracle's exact (score DESC, cent_id ASC) order, with the k
-    centroids inlined as literals — cell assignment as a PURE MAP."""
+    centroids inlined as literals — query-probe ranking
+    (ivf_probes_df) as a PURE MAP."""
     k = len(cent_rows)
     cents = "array(" + ", ".join(_vec_lit(cv) for _, cv in cent_rows) + ")"
     cids = "array(" + ", ".join(str(cid) for cid, _ in cent_rows) + ")"
@@ -554,51 +555,15 @@ def ivf_ranked_cells_sql(
 def ivf_cells_df(
     spark: SparkSession,
     emb: DataFrame,
-    ranked_cells: str,
-    cent_rows: list[tuple[int, list[float]]] | None = None,
+    cent_rows: list[tuple[int, list[float]]],
 ) -> DataFrame:
     """(vec_id, embedding, cell) — nearest-centroid assignment as one
-    map-side scan. Repartition so the CPU-bound per-row evaluation
-    spreads across the cluster even when the source parquet arrives as
-    few splits. When the caller supplies cent_rows AND the run is in
-    GEMM mode (SPARK_GRAFT_ASSIGN=gemm), the assignment runs as the
-    numpy GEMM stage instead of the literal expression — same argmax,
-    ~10× smaller constant at stress-scale k·dim (see assign_cells)."""
-    if cent_rows is not None and assign_mode() == "gemm":
-        return assign_cells(spark, emb, cent_rows).select(
-            "vec_id", "embedding", "cell"
-        )
-    return (
-        emb.repartition(spark.sparkContext.defaultParallelism)
-        .withColumn("cell", F.expr(f"{ranked_cells}[0].c"))
-        .select("vec_id", "embedding", "cell")
+    map-side GEMM stage (assign_cells): repartitioned so the CPU-bound
+    per-row work spreads across the cluster even when the source
+    parquet arrives as few splits."""
+    return assign_cells(spark, emb, cent_rows).select(
+        "vec_id", "embedding", "cell"
     )
-
-
-#: Assignment-path switch: "gemm" (DEFAULT since round 13 — numpy/BLAS
-#: inside mapInPandas, the production configuration) or "literal" (the
-#: generated-expression argmax that is exact to the DuckDB replay by
-#: construction — the oracle-certification mode, which
-#: tools/check_correctness.py pins when the env var is unset). The
-#: GEMM path computes the same dot/|c| argmax with BLAS accumulation
-#: order; everywhere a final ulp could change a decision it carries a
-#: guard band + exact rescore (gemm_rank_cells' near-tie band,
-#: _gemm_block_candidates' EPS superset + rescore) or is exact integer
-#: arithmetic (the kmeans trainer's int64 GEMM twin), so its outputs
-#: are BIT-IDENTICAL to the literal chain — proven by the committed
-#: three-scale full-registry gate in BOTH modes (docs/LOCAL_GATE.md,
-#: guard-tested). Round-13 default decision (verdict item #8): the
-#: mode a deployment gets without remembering an env var must be the
-#: one that finishes the job — literal-mode ×20 dense staleness DNF'd
-#: at 28 minutes where gemm runs the class at ~35 s; the literal chain
-#: stays one env var away for certification sweeps.
-ASSIGN_MODE_ENV = "SPARK_GRAFT_ASSIGN"
-
-
-def assign_mode() -> str:
-    import os
-
-    return os.environ.get(ASSIGN_MODE_ENV, "gemm")
 
 
 def gemm_assign_cells(
@@ -607,35 +572,34 @@ def gemm_assign_cells(
 ) -> DataFrame:
     """Append ``cell`` (nearest trained centroid by dot/|c|, cent_id
     tiebreak) to every row of ``df`` with the score matrix computed as
-    ONE numpy GEMM per Arrow batch — the production alternative to the
-    literal-centroid expression for large k·dim (SCALE.md: the
-    full-corpus literal assignment is the dominant stress-scale cost
-    of the trained-index family; a batch×k×dim BLAS multiply is the
-    same flops at a ~10× smaller constant, off the expression
-    interpreter entirely).
+    ONE numpy GEMM per Arrow batch — a batch×k×dim BLAS multiply, off
+    the expression interpreter entirely (SCALE.md: full-corpus
+    assignment is the dominant stress-scale cost of the trained-index
+    family).
 
-    Exact-semantics contract with ivf_ranked_cells_sql (pinned by
-    tests/test_gemm_assign.py against the literal path):
+    Exact-semantics contract with the oracle's ranking (IVF_CELLS_CTE,
+    and its Spark twin ivf_ranked_cells_sql — both a sequential
+    left-fold dot; pinned by tests/test_gemm_assign.py against that
+    expression):
     - valid rows (len == dim, all elements finite): argmax of
       dot(v, c)/|c| over centroids, first-index (= smallest cent_id,
-      cent_rows being cid-sorted) on exact ties — the literal path's
-      array_sort((s, c)) order. BLAS accumulation differs from the
-      sequential fold only in final ulps; gate corpora are pinned
+      cent_rows being cid-sorted) on exact ties — the oracle's
+      (score DESC, cent_id ASC) order. BLAS accumulation differs from
+      the sequential fold only in final ulps; gate corpora are pinned
       set-equal.
     - degenerate rows (NULL vector, ragged length, NULL/NaN element):
-      every dot folds to NULL in the literal path, so ALL centroids
-      tie and the smallest cent_id wins — replicated here verbatim.
-      A ±inf ELEMENT raises ValueError (round-12): the literal path
-      does NOT share the min-cent_id routing there (inf·0 = NaN for
-      some centroids, ±inf for others, so it can rank a real winner),
-      so rather than silently misplacing such vectors this path
-      refuses them loudly — embeddings with infinities are outside
-      the contract, and the embedding_audit ingest gate is the
-      upstream fix (the contract is now self-enforcing instead of
-      trusted).
-    - a zero-norm CENTROID makes the literal path's dot/|c| abort
-      under ANSI (DIVIDE_BY_ZERO), so this path raises ValueError up
-      front rather than inventing semantics the default path lacks.
+      every dot folds to NULL in the oracle, so ALL centroids tie and
+      the smallest cent_id wins — replicated here verbatim.
+    - a ±inf ELEMENT raises ValueError: the sequential fold does NOT
+      share the min-cent_id routing there (inf·0 = NaN for some
+      centroids, ±inf for others, so it can rank a real winner), so
+      rather than silently misplacing such vectors this path refuses
+      them loudly — embeddings with infinities are outside the
+      contract, and the embedding_audit ingest gate is the upstream
+      fix.
+    - a zero-norm CENTROID makes the oracle's dot/|c| undefined (ANSI
+      DIVIDE_BY_ZERO in the Spark twin), so this path raises
+      ValueError up front rather than inventing semantics.
 
     Preserves every input column; no shuffle (mapInPandas is
     partition-preserving — repartition upstream for CPU spread, as
@@ -659,8 +623,9 @@ def gemm_assign_cells(
     norms = _np.sqrt((cmat * cmat).sum(axis=1))
     if bool((norms == 0.0).any()):
         raise ValueError(
-            "gemm_assign_cells: zero-norm centroid — the literal"
-            " assignment path aborts on this too (ANSI DIVIDE_BY_ZERO)"
+            "gemm_assign_cells: zero-norm centroid — dot/|c| is"
+            " undefined (the SQL ranking aborts with ANSI"
+            " DIVIDE_BY_ZERO)"
         )
     cid_arr = _np.asarray(cids, dtype=_np.int64)
     # A FRESH StructType: StructType.add mutates in place, and
@@ -687,17 +652,16 @@ def gemm_assign_cells(
                     continue
                 if not _np.isfinite(a).all():
                     # NULL elements arrive as NaN through the float64
-                    # conversion; NaN folds the literal dot to NULL →
-                    # min-cent_id, replicated by skipping the GEMM.
-                    # ±inf is DIFFERENT: the literal path can rank a
-                    # real winner there, so fail loudly instead of
-                    # silently diverging (the documented contract,
-                    # now enforced inline).
+                    # conversion; NaN folds the oracle's dot to NULL
+                    # → min-cent_id, replicated by skipping the GEMM.
+                    # ±inf is DIFFERENT: the sequential fold can rank
+                    # a real winner there, so fail loudly instead of
+                    # silently diverging.
                     if _np.isinf(a).any():
                         raise ValueError(
                             "gemm_assign_cells: embedding with a ±inf"
                             " element — outside the GEMM path's"
-                            " contract (the literal path can rank a"
+                            " contract (the oracle's fold can rank a"
                             " real winner here); reject such rows"
                             " upstream (embedding_audit) before"
                             " assignment"
@@ -741,21 +705,20 @@ def gemm_rank_cells(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Append ``rcells`` (the TOP-``r`` centroid ids by dot/|c| DESC,
-    cent_id ASC — i.e. the first r entries of the literal path's
+    cent_id ASC — i.e. the first r entries of ivf_ranked_cells_sql's
     array_sort'ed ranked-cells array) to every row of ``df``, scores
     computed as one numpy GEMM per Arrow batch. gemm_assign_cells is
     the r=1 special case; this is the RESIDENCY assignment the kNN
-    graph build needs (round-12 verdict item #1 — the build explodes
-    each vector to its KNN_RESIDENCY nearest cells, which before this
-    ran the full O(N·k·dim) literal ranked expression).
+    graph build needs (the build explodes each vector to its
+    KNN_RESIDENCY nearest cells).
 
     Same exact-semantics contract as gemm_assign_cells, extended to
     the prefix: valid rows take the stable argsort of the GEMM scores
     (stable = cid-ascending tiebreak, cent_rows being cid-sorted);
-    degenerate rows (NULL/ragged/NaN) fold every literal score to
-    NULL so ALL centroids tie and the r SMALLEST cent_ids win —
-    replicated verbatim; ±inf elements raise (the enforced contract);
-    zero-norm centroids raise up front. Set-equality with the literal
+    degenerate rows (NULL/ragged/NaN) fold every SQL score to NULL so
+    ALL centroids tie and the r SMALLEST cent_ids win — replicated
+    verbatim; ±inf elements raise (the enforced contract); zero-norm
+    centroids raise up front. Set-equality with the SQL ranking's
     prefix is pinned by tests/test_gemm_assign.py.
 
     NEAR-TIE exactness (round-13, advice item): BLAS and the literal
@@ -790,8 +753,9 @@ def gemm_rank_cells(
     norms = _np.asarray([_py_norm(cv) for _, cv in cent_rows])
     if bool((norms == 0.0).any()):
         raise ValueError(
-            "gemm_rank_cells: zero-norm centroid — the literal"
-            " assignment path aborts on this too (ANSI DIVIDE_BY_ZERO)"
+            "gemm_rank_cells: zero-norm centroid — dot/|c| is"
+            " undefined (the SQL ranking aborts with ANSI"
+            " DIVIDE_BY_ZERO)"
         )
     cvecs = [list(map(float, cv)) for _, cv in cent_rows]
     cid_arr = _np.asarray(cids, dtype=_np.int64)
@@ -877,21 +841,13 @@ def assign_cells(
     df: DataFrame,
     cent_rows: list[tuple[int, list[float]]],
     vec_col: str = "embedding",
-    mode: str | None = None,
 ) -> DataFrame:
-    """The assignment-stage dispatcher every index build/lifecycle op
-    routes through: append ``cell`` to ``df`` via the literal
-    generated-expression argmax (default — bit-tied to the DuckDB
-    oracles) or the numpy GEMM (mode="gemm", or SPARK_GRAFT_ASSIGN=gemm
-    for a whole run — the stress harness's A/B lever). Both paths
-    repartition first: assignment is CPU-bound per row and the source
+    """The assignment stage every index build/lifecycle op routes
+    through: append ``cell`` to ``df`` via gemm_assign_cells, after a
+    repartition — assignment is CPU-bound per row and the source
     parquet's split count must not serialize it."""
-    mode = mode or assign_mode()
     df = df.repartition(spark.sparkContext.defaultParallelism)
-    if mode == "gemm":
-        return gemm_assign_cells(df, cent_rows, vec_col)
-    ranked = ivf_ranked_cells_sql(cent_rows, col=vec_col)
-    return df.withColumn("cell", F.expr(f"{ranked}[0].c"))
+    return gemm_assign_cells(df, cent_rows, vec_col)
 
 
 def ivf_probes_df(
@@ -1259,7 +1215,7 @@ def q_sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
             [], "query_id bigint, vec_id bigint, score double, rk int"
         )
     ranked_cells = ivf_ranked_cells_sql(cent_rows)
-    cells = ivf_cells_df(spark, emb, ranked_cells, cent_rows)
+    cells = ivf_cells_df(spark, emb, cent_rows)
     probes = ivf_probes_df(
         emb, ranked_cells, n_probe=trained_n_probe(len(cent_rows), n)
     )
@@ -1298,7 +1254,7 @@ def q_sim_topk_ivf_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
             [], "query_id bigint, vec_id bigint, score double, rk int"
         )
     ranked_cells = ivf_ranked_cells_sql(cent_rows)
-    cells = ivf_cells_df(spark, emb, ranked_cells, cent_rows)
+    cells = ivf_cells_df(spark, emb, cent_rows)
     probes = ivf_probes_df(emb, ranked_cells)
     scored = (
         cells.join(

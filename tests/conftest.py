@@ -31,3 +31,17 @@ def demo_docs(spark):
         ],
         "doc_id string, text string",
     )
+
+
+def ref_assign_cells(df, cent_rows, vec_col="embedding"):
+    """Reference nearest-centroid assignment for tests: the first entry
+    of the SQL ranking (ivf_ranked_cells_sql — dot/|c| DESC, cent_id
+    ASC by the oracle's sequential fold), evaluated as a generated
+    expression. The production GEMM stage (assign_cells) is checked
+    against it."""
+    from pyspark.sql import functions as F
+
+    from dist_mapreduce_spark.plans.similarity import ivf_ranked_cells_sql
+
+    ranked = ivf_ranked_cells_sql(cent_rows, col=vec_col)
+    return df.withColumn("cell", F.expr(f"{ranked}[0].c"))

@@ -25,21 +25,31 @@ def _registry_size() -> int:
 
 
 def test_local_gate_covers_full_registry():
-    """The headline `Result: N/N PASS` in docs/LOCAL_GATE.md must count
-    exactly len(QUERIES) — a registry that outgrew the committed gate
-    fails here, loudly, at the next pytest run."""
+    """The `**Result:**` line in docs/LOCAL_GATE.md must show one
+    `N/N PASS` per gate scale (sf0.01, sf0.1, sf0.001), each counting
+    exactly len(QUERIES) — a registry that outgrew any of the committed
+    sweeps fails here, loudly, at the next pytest run."""
     assert os.path.isfile(GATE), "docs/LOCAL_GATE.md missing"
     text = open(GATE).read()
-    m = re.search(r"\*\*Result: (\d+)/(\d+) PASS\*\*", text)
+    m = re.search(r"^\*\*Result:\*\* (.+)$", text, re.M)
     assert m, "LOCAL_GATE.md lost its Result headline"
-    n_pass, n_total = int(m.group(1)), int(m.group(2))
-    n_reg = _registry_size()
-    assert n_total == n_reg, (
-        f"LOCAL_GATE covers {n_total} queries but the registry has "
-        f"{n_reg} — rerun tools/check_correctness.py at all three "
-        f"scales and tools/make_local_gate.py"
+    results = {
+        sf: (int(n_pass), int(n_total))
+        for sf, n_pass, n_total in re.findall(
+            r"\*\*(sf[\d.]+): (\d+)/(\d+) PASS\*\*", m.group(1)
+        )
+    }
+    assert set(results) == {"sf0.01", "sf0.1", "sf0.001"}, (
+        f"Result headline must record all three scales: {m.group(0)}"
     )
-    assert n_pass == n_total, f"committed gate shows failures: {m.group(0)}"
+    n_reg = _registry_size()
+    for sf, (n_pass, n_total) in sorted(results.items()):
+        assert n_total == n_reg, (
+            f"LOCAL_GATE covers {n_total} queries at {sf} but the"
+            f" registry has {n_reg} — rerun tools/run_gate_sweeps.sh"
+            f" and tools/make_local_gate.py"
+        )
+        assert n_pass == n_total, f"committed {sf} gate shows failures"
 
 
 def test_local_gate_row_per_query():
@@ -71,25 +81,39 @@ def test_explain_audit_covers_full_registry():
     assert not missing, f"queries missing from EXPLAIN.md: {missing}"
 
 
-def test_local_gate_has_three_scale_gemm_section():
-    """Round-12 verdict item #4: the production configuration
-    (SPARK_GRAFT_ASSIGN=gemm) must carry the SAME three-scale
-    full-registry evidence as the literal default — LOCAL_GATE.md's
-    GEMM paragraph must claim N/N PASS at three scales with N = the
-    live registry size, so a registry that outgrows the gemm sweep
-    fails here like the literal one does."""
-    text = open(GATE).read()
-    m = re.search(r"GEMM mode.*?(?=\n\n)", text, re.S)
-    assert m, "LOCAL_GATE.md lost its GEMM-mode paragraph"
-    para = m.group(0)
-    results = re.findall(r"(\d+)/(\d+) PASS", para)
-    assert len(results) >= 3, (
-        "GEMM paragraph must record all three scales"
-        f" (found {len(results)})"
-    )
-    n_reg = _registry_size()
-    for n_pass, n_total in results:
-        assert int(n_total) == n_reg, (
-            f"GEMM gate covers {n_total} queries, registry has {n_reg}"
+def test_make_local_gate_reports_each_scale(tmp_path):
+    """tools/make_local_gate.py takes exactly one sweep per scale,
+    writes one `N/N PASS` per scale into the Result line, and exits
+    non-zero when any sweep has a FAIL or rows-only row."""
+    import subprocess
+    import sys
+
+    tool = os.path.join(REPO, "tools", "make_local_gate.py")
+    good = "PASS  q_a (3 rows, 0.5s)\nPASS  q_b (1 rows, 0.2s)\n"
+    logs = []
+    for sf, body in (
+        ("sf0.01", good),
+        ("sf0.1", "PASS  q_a (3 rows, 0.5s)\nFAIL  q_b: values differ\n"),
+        ("sf0.001", good),
+    ):
+        path = tmp_path / f"{sf}.log"
+        path.write_text(body)
+        logs.append(str(path))
+
+    def run(*args):
+        return subprocess.run(
+            [sys.executable, tool, *args], capture_output=True, text=True
         )
-        assert int(n_pass) == int(n_total), "GEMM gate shows failures"
+
+    out = run(*logs)
+    assert out.returncode == 1, out.stderr
+    line = re.search(r"^\*\*Result:\*\* (.+)$", out.stdout, re.M).group(1)
+    assert re.findall(r"\*\*(sf[\d.]+): (\d+)/(\d+) PASS\*\*", line) == [
+        ("sf0.01", "2", "2"),
+        ("sf0.1", "1", "2"),
+        ("sf0.001", "2", "2"),
+    ]
+    assert "sf0.1 FAIL `q_b`" in out.stdout
+    assert "| `q_b` | PASS | 1 | 0.2 |" in out.stdout  # table = sf0.01
+    assert run(logs[0], logs[2], logs[2]).returncode == 0
+    assert run(logs[0]).returncode == 2  # one sweep per scale, all three

@@ -1,8 +1,10 @@
-"""GEMM assignment path (round 11): the numpy/BLAS centroid
-assignment must land every vector in the same cell as the
-oracle-gated literal-expression path — on the real gate corpus, on
-the dense chunk corpus, and on every degenerate row shape the literal
-path tolerates (the contract gemm_assign_cells documents)."""
+"""GEMM assignment path: the numpy/BLAS centroid assignment must land
+every vector in the same cell as the oracle's sequential-fold ranking
+— on the real gate corpus, on the dense chunk corpus, and on every
+degenerate row shape the fold tolerates (the contract
+gemm_assign_cells documents). The references live here: the SQL
+ranking expression (ref_assign_cells), an exact-int (sqdist, cid)
+argmin for k-means, and the per-pair fold self-join for kNN pairs."""
 
 from __future__ import annotations
 
@@ -11,11 +13,100 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, ref_assign_cells
 
 
 def _cells_map(df):
     return {int(r["vec_id"]): int(r["cell"]) for r in df.collect()}
+
+
+def _ref_kmeans_assign(df, centroids):
+    """(vec_id, cluster): exact int64 argmin over (sqdist, cid)
+    structs — lexicographic struct order is the tie-break."""
+    from dist_mapreduce_spark.plans.iterative import kmeans_sqdist
+
+    dists = F.array(
+        *[
+            F.struct(
+                kmeans_sqdist(F.col("q"), c).alias("d"),
+                F.lit(i).cast("int").alias("cid"),
+            )
+            for i, c in enumerate(centroids)
+        ]
+    )
+    return df.select("vec_id", F.array_min(dists)["cid"].alias("cluster"))
+
+
+def _ref_lloyds(rows, k, n_iter):
+    """The fixed-point Lloyd's loop replayed in Python ints over
+    (vec_id, q) rows: seeds = first k by vec_id, (sqdist, cid) argmin,
+    floor-div means, empty clusters keep their centroid."""
+    rows = sorted(rows)
+    cents = [list(q) for _, q in rows[:k]]
+    for _ in range(n_iter):
+        sums: dict = {}
+        for _, q in rows:
+            c = min(
+                range(len(cents)),
+                key=lambda i: (sum((a - b) ** 2 for a, b in zip(q, cents[i])), i),
+            )
+            acc = sums.setdefault(c, [[0] * len(q), 0])
+            acc[0] = [s + x for s, x in zip(acc[0], q)]
+            acc[1] += 1
+        cents = [
+            [s // sums[i][1] for s in sums[i][0]] if i in sums else cents[i]
+            for i in range(len(cents))
+        ]
+    return cents
+
+
+def _ref_pair_scores(res):
+    """DISTINCT (src_id, dst_id, score) over in-block pairs: the
+    (rcell, sub) self-join with the per-pair fold — the oracle's pr
+    CTE."""
+    from dist_mapreduce_spark.functions.vectors import cosine_spark_sql
+
+    a, b = res.alias("a"), res.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.rcell") == F.col("b.rcell"))
+            & (F.col("a.sub") == F.col("b.sub"))
+            & (F.col("a.vec_id") != F.col("b.vec_id")),
+        )
+        .select(
+            F.col("a.vec_id").alias("src_id"),
+            F.col("b.vec_id").alias("dst_id"),
+            F.expr(cosine_spark_sql("a.embedding", "b.embedding")).alias(
+                "score"
+            ),
+        )
+        .distinct()
+    )
+
+
+def _ref_probe_truth(emb):
+    """Brute-force probe truth: every (probe, corpus) pair through the
+    per-pair fold, top KNN_K by (score DESC, dst_id ASC)."""
+    from pyspark.sql import Window
+
+    from dist_mapreduce_spark.functions.vectors import cosine_spark_sql
+    from dist_mapreduce_spark.plans.knn_graph import KNN_K, KNN_PROBE
+
+    probe = emb.filter(
+        (F.col("vec_id") < KNN_PROBE) & F.col("embedding").isNotNull()
+    ).select(F.col("vec_id").alias("src_id"), F.col("embedding").alias("qv"))
+    corpus = emb.filter(F.col("embedding").isNotNull()).select(
+        F.col("vec_id").alias("dst_id"), F.col("embedding").alias("ev")
+    )
+    w = Window.partitionBy("src_id").orderBy(F.desc("score"), F.asc("dst_id"))
+    return (
+        corpus.join(F.broadcast(probe), F.col("dst_id") != F.col("src_id"))
+        .withColumn("score", F.expr(cosine_spark_sql("qv", "ev")))
+        .withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= KNN_K)
+        .select("src_id", "dst_id")
+    )
 
 
 def test_gemm_matches_literal_on_gate_corpus(spark):
@@ -31,12 +122,12 @@ def test_gemm_matches_literal_on_gate_corpus(spark):
     cent_rows, _n = trained_quantizer(emb)
     assert cent_rows
     lit = _cells_map(
-        assign_cells(spark, emb, cent_rows, mode="literal").select(
+        ref_assign_cells(emb, cent_rows).select(
             "vec_id", "cell"
         )
     )
     gem = _cells_map(
-        assign_cells(spark, emb, cent_rows, mode="gemm").select(
+        assign_cells(spark, emb, cent_rows).select(
             "vec_id", "cell"
         )
     )
@@ -57,12 +148,12 @@ def test_gemm_matches_literal_on_dense_chunks(spark):
     cent_rows, _n = trained_quantizer(cv.select("vec_id", "embedding"))
     assert cent_rows
     lit = _cells_map(
-        assign_cells(spark, cv, cent_rows, mode="literal").select(
+        ref_assign_cells(cv, cent_rows).select(
             "vec_id", "cell"
         )
     )
     gem = _cells_map(
-        assign_cells(spark, cv, cent_rows, mode="gemm").select(
+        assign_cells(spark, cv, cent_rows).select(
             "vec_id", "cell"
         )
     )
@@ -71,7 +162,7 @@ def test_gemm_matches_literal_on_dense_chunks(spark):
 
 def test_gemm_degenerate_rows_match_literal(spark):
     """NULL vector, ragged length, zero vector, NaN element: the
-    literal path folds every score to NULL (or −0.0 ties) and the
+    SQL ranking folds every score to NULL (or −0.0 ties) and the
     min-cent_id tiebreak wins — the GEMM path must replicate each."""
     from dist_mapreduce_spark.plans.similarity import assign_cells
 
@@ -86,12 +177,12 @@ def test_gemm_degenerate_rows_match_literal(spark):
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     lit = _cells_map(
-        assign_cells(spark, df, cents, mode="literal").select(
+        ref_assign_cells(df, cents).select(
             "vec_id", "cell"
         )
     )
     gem = _cells_map(
-        assign_cells(spark, df, cents, mode="gemm").select("vec_id", "cell")
+        assign_cells(spark, df, cents).select("vec_id", "cell")
     )
     assert lit == gem
     # The degenerate rows all land in the smallest cent_id.
@@ -100,33 +191,22 @@ def test_gemm_degenerate_rows_match_literal(spark):
     assert lit[1] == 3 and lit[6] == 9
 
 
-def test_gemm_inf_element_raises_literal_unchanged(spark):
-    """Round-12 (verdict item #2): a ±inf embedding ELEMENT is the one
-    degenerate shape where the literal path can rank a real winner
-    while the old GEMM guard silently routed to min-cent_id — the GEMM
-    path must now refuse LOUDLY, and the literal path's behavior must
-    be unchanged (it still assigns a cell without raising)."""
+def test_gemm_inf_element_raises(spark):
+    """A ±inf embedding ELEMENT is the one degenerate shape where the
+    oracle's sequential fold can rank a real winner instead of routing
+    to min-cent_id — the GEMM path must refuse LOUDLY, never misplace
+    the vector silently."""
     from dist_mapreduce_spark.plans.similarity import assign_cells
 
     cents = [(3, [1.0, 0.0, 0.0]), (7, [0.0, 1.0, 0.0])]
     rows = [(1, [0.9, 0.1, 0.0]), (2, [float("inf"), 1.0, 0.0])]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    # Literal mode: no error; the inf row ranks a real winner (dot with
-    # cid 3 = +inf beats cid 7's finite score).
-    lit = _cells_map(
-        assign_cells(spark, df, cents, mode="literal").select(
-            "vec_id", "cell"
-        )
-    )
-    assert lit[1] == 3 and lit[2] == 3
-    # GEMM mode: the contract is enforced inline — loud failure, never
-    # a silent misplacement.
     with pytest.raises(Exception, match="inf"):
-        assign_cells(spark, df, cents, mode="gemm").collect()
+        assign_cells(spark, df, cents).collect()
 
 
 def test_gemm_zero_norm_centroid_raises(spark):
-    """The literal path aborts (ANSI DIVIDE_BY_ZERO) on a zero-norm
+    """The SQL ranking aborts (ANSI DIVIDE_BY_ZERO) on a zero-norm
     centroid; the GEMM path must refuse up front, not invent a cell."""
     from dist_mapreduce_spark.plans.similarity import gemm_assign_cells
 
@@ -149,12 +229,12 @@ def test_gemm_tiebreak_is_min_cent_id(spark):
         "vec_id long, embedding array<double>",
     )
     lit = _cells_map(
-        assign_cells(spark, df, cents, mode="literal").select(
+        ref_assign_cells(df, cents).select(
             "vec_id", "cell"
         )
     )
     gem = _cells_map(
-        assign_cells(spark, df, cents, mode="gemm").select("vec_id", "cell")
+        assign_cells(spark, df, cents).select("vec_id", "cell")
     )
     assert lit == gem == {1: 2, 2: 2}
 
@@ -177,21 +257,19 @@ def test_gemm_preserves_extra_columns(spark):
 
 
 def test_kmeans_gemm_assignment_bit_identical(spark):
-    """The trainer's int64 GEMM twin is BIT-IDENTICAL (not merely
-    set-equal): exact integer arithmetic has no accumulation order to
-    disagree about. Pin (a) per-row cluster equality of one assignment
-    pass including degenerate rows, and (b) the trained centroids of a
-    full 5-round run being list-equal under both modes."""
-    import os
-
+    """The trainer's int64 GEMM assignment is BIT-IDENTICAL (not merely
+    set-equal) to the exact (sqdist, cid) argmin: exact integer
+    arithmetic has no accumulation order to disagree about. Pin (a)
+    per-row cluster equality of one assignment pass including
+    degenerate rows, and (b) the trained centroids of a full N_ITER
+    run being list-equal to a Python-int replay of Lloyd's loop."""
     from pyspark.sql import functions as F
 
     from dist_mapreduce_spark.plans.iterative import (
-        kmeans_assign,
+        N_ITER,
         kmeans_assign_gemm,
         train_kmeans_centroids_df,
     )
-    from dist_mapreduce_spark.plans.similarity import ASSIGN_MODE_ENV
     from dist_mapreduce_spark.sources.tables import load_table
 
     emb = (
@@ -211,7 +289,7 @@ def test_kmeans_gemm_assignment_bit_identical(spark):
     ]
     lit = {
         int(r["vec_id"]): int(r["cluster"])
-        for r in kmeans_assign(emb, cents).collect()
+        for r in _ref_kmeans_assign(emb, cents).collect()
     }
     gem = {
         int(r["vec_id"]): int(r["cluster"])
@@ -227,7 +305,7 @@ def test_kmeans_gemm_assignment_bit_identical(spark):
     c2 = [[5] * 64, [0] * 64]
     lit2 = {
         int(r["vec_id"]): int(r["cluster"])
-        for r in kmeans_assign(dg, c2).collect()
+        for r in _ref_kmeans_assign(dg, c2).collect()
     }
     gem2 = {
         int(r["vec_id"]): int(r["cluster"])
@@ -235,19 +313,13 @@ def test_kmeans_gemm_assignment_bit_identical(spark):
     }
     assert lit2 == gem2 == {1: 0, 2: 0, 3: 0}
 
-    # Full training run: centroids list-equal under both modes
-    # (explicit env pins — the process default is gemm since r13).
-    os.environ[ASSIGN_MODE_ENV] = "literal"
-    try:
-        want = train_kmeans_centroids_df(emb, 13)
-    finally:
-        os.environ.pop(ASSIGN_MODE_ENV, None)
-    os.environ[ASSIGN_MODE_ENV] = "gemm"
-    try:
-        got = train_kmeans_centroids_df(emb, 13)
-    finally:
-        os.environ.pop(ASSIGN_MODE_ENV, None)
-    assert got == want
+    # Full training run: centroids list-equal to the Python replay.
+    want = _ref_lloyds(
+        [(int(r["vec_id"]), [int(x) for x in r["q"]]) for r in emb.collect()],
+        13,
+        N_ITER,
+    )
+    assert train_kmeans_centroids_df(emb, 13) == want
 
 
 def test_gemm_rank_cells_matches_literal_prefix(spark):
@@ -361,43 +433,35 @@ def test_gemm_rank_cells_near_tie_rescored(spark):
 
 
 def test_knn_graph_gemm_equals_literal(spark):
-    """Round-12 verdict item #1's pin: the GEMM-accelerated kNN graph
-    build (gemm residency ranking + blockwise BLAS candidate
-    pre-selection + exact rescore) is BIT-IDENTICAL to the literal
-    build — full (src, dst, score, rk) row equality, not just the
-    edge set, because the surviving pairs are exact-rescored."""
-    import os
+    """The GEMM kNN graph build (gemm residency ranking + blockwise
+    BLAS candidate pre-selection + exact rescore) is BIT-IDENTICAL to
+    the oracle's per-pair fold chain — full (src, dst, score, rk) row
+    equality, not just the edge set, because the surviving pairs are
+    exact-rescored. Checked for knn_graph and knn_graph_collapsed
+    against their DuckDB oracles."""
+    import duckdb
 
     from dist_mapreduce_spark.plans.knn_graph import (
         q_knn_graph,
         q_knn_graph_collapsed,
     )
-    from dist_mapreduce_spark.plans.similarity import ASSIGN_MODE_ENV
+    from dist_mapreduce_spark.plans.registry import ORACLES
 
-    os.environ[ASSIGN_MODE_ENV] = "literal"
-    try:
-        lit = sorted(
-            tuple(r) for r in q_knn_graph(spark, SF_SMOKE).collect()
-        )
-        litc = sorted(
-            tuple(r)
-            for r in q_knn_graph_collapsed(spark, SF_SMOKE).collect()
-        )
-    finally:
-        os.environ.pop(ASSIGN_MODE_ENV, None)
-    os.environ[ASSIGN_MODE_ENV] = "gemm"
-    try:
-        gem = sorted(
-            tuple(r) for r in q_knn_graph(spark, SF_SMOKE).collect()
-        )
-        gemc = sorted(
-            tuple(r)
-            for r in q_knn_graph_collapsed(spark, SF_SMOKE).collect()
-        )
-    finally:
-        os.environ.pop(ASSIGN_MODE_ENV, None)
-    assert lit and lit == gem
-    assert litc and litc == gemc
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW embeddings AS SELECT * FROM"
+        f" '{SF_SMOKE}/embeddings.parquet'"
+    )
+    for name, fn in (
+        ("knn_graph", q_knn_graph),
+        ("knn_graph_collapsed", q_knn_graph_collapsed),
+    ):
+        got_df = fn(spark, SF_SMOKE)
+        cols = got_df.columns
+        got = sorted(tuple(r) for r in got_df.collect())
+        cur = con.execute(f"SELECT {', '.join(cols)} FROM ({ORACLES[name]})")
+        want = sorted(tuple(r) for r in cur.fetchall())
+        assert got and got == want, name
 
 
 def test_gemm_block_candidates_superset_with_degenerates(spark):
@@ -409,10 +473,6 @@ def test_gemm_block_candidates_superset_with_degenerates(spark):
     import numpy as np
 
     from dist_mapreduce_spark.plans.knn_graph import pair_scores
-    from dist_mapreduce_spark.plans.similarity import ASSIGN_MODE_ENV
-    import os
-
-    from pyspark.sql import functions as F
 
     rows = [
         (0, [1.0, 0.0, 0.0]),
@@ -433,16 +493,12 @@ def test_gemm_block_candidates_superset_with_degenerates(spark):
     )
     lit = sorted(
         (int(r["src_id"]), int(r["dst_id"]), r["score"])
-        for r in pair_scores(res, df, mode="literal").collect()
+        for r in _ref_pair_scores(res).collect()
     )
-    os.environ[ASSIGN_MODE_ENV] = "gemm"
-    try:
-        gem = sorted(
-            (int(r["src_id"]), int(r["dst_id"]), r["score"])
-            for r in pair_scores(res, df).collect()
-        )
-    finally:
-        os.environ.pop(ASSIGN_MODE_ENV, None)
+    gem = sorted(
+        (int(r["src_id"]), int(r["dst_id"]), r["score"])
+        for r in pair_scores(res, df).collect()
+    )
     # K=5, block of 7 → every pair survives pre-selection here, so the
     # scored sets must be IDENTICAL (NaN-safe compare).
     def norm(t):
@@ -464,15 +520,10 @@ def test_gemm_small_finite_block_no_self_pairs(spark):
     (The degenerate-corpus test above routes through the non-finite
     branch, which masks the diagonal correctly — this block must stay
     all-finite to hit the fast path.)"""
-    import os
-
-    from pyspark.sql import functions as F
-
     from dist_mapreduce_spark.plans.knn_graph import (
         _gemm_block_candidates,
         pair_scores,
     )
-    from dist_mapreduce_spark.plans.similarity import ASSIGN_MODE_ENV
 
     rows = [
         (0, [1.0, 0.0, 0.0]),
@@ -494,14 +545,8 @@ def test_gemm_small_finite_block_no_self_pairs(spark):
     }
     assert cand, "pre-selection must keep the finite pairs"
     assert not any(s == d for s, d in cand), "self-pairs leaked"
-    lit = sorted(
-        tuple(r) for r in pair_scores(res, df, mode="literal").collect()
-    )
-    os.environ[ASSIGN_MODE_ENV] = "gemm"
-    try:
-        gem = sorted(tuple(r) for r in pair_scores(res, df).collect())
-    finally:
-        os.environ.pop(ASSIGN_MODE_ENV, None)
+    lit = sorted(tuple(r) for r in _ref_pair_scores(res).collect())
+    gem = sorted(tuple(r) for r in pair_scores(res, df).collect())
     assert lit == gem
     assert not any(r[0] == r[1] for r in gem)
 
@@ -509,7 +554,7 @@ def test_gemm_small_finite_block_no_self_pairs(spark):
 def test_probe_truth_gemm_equals_literal_and_adversarial(spark, tmp_path):
     """_probe_truth's GEMM pre-selection arm (the statistic behind
     knn_graph_recall and knn_graph_maintain) must be BIT-IDENTICAL to
-    the literal oracle-shaped chain: (a) on the gate corpus, and
+    the oracle-shaped brute-force reference: (a) on the gate corpus, and
     (b) on an adversarial fixture with 20-way EXACT score ties at the
     K boundary (the guard band must keep every tie), a NULL
     embedding, a zero-norm vector (non-finite GEMM scores), a
@@ -524,9 +569,7 @@ def test_probe_truth_gemm_equals_literal_and_adversarial(spark, tmp_path):
         return sorted(tuple(r) for r in df.collect())
 
     e = _emb(spark, SF_SMOKE)
-    assert rows(_probe_truth(e, mode="literal")) == rows(
-        _probe_truth(e, mode="gemm")
-    )
+    assert rows(_ref_probe_truth(e)) == rows(_probe_truth(e))
 
     data = []
     for v in range(60):
@@ -540,6 +583,31 @@ def test_probe_truth_gemm_equals_literal_and_adversarial(spark, tmp_path):
     df = spark.createDataFrame(
         data, "vec_id long, embedding array<float>, label int"
     )
-    lit = rows(_probe_truth(df, mode="literal"))
-    gem = rows(_probe_truth(df, mode="gemm"))
+    lit = rows(_ref_probe_truth(df))
+    gem = rows(_probe_truth(df))
     assert lit == gem and len(lit) > 0
+
+
+def test_assignment_functions_take_no_mode():
+    """Vector assignment has one path: none of the assignment-stage
+    entry points accepts a mode switch."""
+    import inspect
+
+    from dist_mapreduce_spark.plans import knn_graph, similarity
+
+    for fn in (
+        similarity.assign_cells,
+        similarity.ivf_cells_df,
+        knn_graph._residency_explode,
+        knn_graph.knn_res_frame,
+        knn_graph.pair_scores,
+        knn_graph._probe_truth,
+        knn_graph._rederive_sources,
+        knn_graph._knn_graph_impl,
+    ):
+        assert "mode" not in inspect.signature(fn).parameters, fn.__name__
+    assert list(inspect.signature(similarity.ivf_cells_df).parameters) == [
+        "spark",
+        "emb",
+        "cent_rows",
+    ]

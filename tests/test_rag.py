@@ -17,7 +17,7 @@ from dist_mapreduce_spark.plans.rag import (
     q_chunk_documents,
     q_sim_topk_mmr,
 )
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, ref_assign_cells
 
 
 def _plan(df) -> str:
@@ -370,10 +370,7 @@ def test_dense_upsert_changes_chunk_cardinality(spark, tmp_path):
         _dense_chunk_vectors,
         q_dense_index_upsert,
     )
-    from dist_mapreduce_spark.plans.similarity import (
-        assign_cells,
-        trained_quantizer,
-    )
+    from dist_mapreduce_spark.plans.similarity import trained_quantizer
 
     rows = [(11, " ".join(f"w{j}" for j in range(30)), "en", "webA")]
     for i in range(2, 30):  # none of these hit i % 97 == 11
@@ -414,9 +411,7 @@ def test_dense_upsert_changes_chunk_cardinality(spark, tmp_path):
     )
     want = {
         int(r["vec_id"]): int(r["cell"])
-        for r in assign_cells(
-            spark, post.unionByName(edited), cent_rows, mode="literal"
-        )
+        for r in ref_assign_cells(post.unionByName(edited), cent_rows)
         .select("vec_id", "cell")
         .collect()
     }
@@ -520,10 +515,7 @@ def test_dense_retrain_walk_fires_rebuilds_and_serves(spark, tmp_path):
         q_dense_index_staleness,
         q_search_dense_maxp_retrained,
     )
-    from dist_mapreduce_spark.plans.similarity import (
-        assign_cells,
-        trained_quantizer,
-    )
+    from dist_mapreduce_spark.plans.similarity import trained_quantizer
 
     rows = [(i, " ".join(f"q{i}_{j}" for j in range(8))) for i in range(3)]
     rows += [
@@ -545,7 +537,7 @@ def test_dense_retrain_walk_fires_rebuilds_and_serves(spark, tmp_path):
     }
     cu = _dense_cu_frame(spark, sfdir)
     cent_fresh, _n = trained_quantizer(cu.select("vec_id", "embedding"))
-    want_cells = assign_cells(spark, cu, cent_fresh, mode="literal")
+    want_cells = ref_assign_cells(cu, cent_fresh)
     want = {
         int(r["cell"]): (int(r["n"]), int(r["s"]))
         for r in want_cells.groupBy("cell")
