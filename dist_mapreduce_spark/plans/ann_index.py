@@ -76,7 +76,11 @@ from dist_mapreduce_spark.plans.similarity import (
     trained_quantizer,
     trained_topk_oracle,
 )
-from dist_mapreduce_spark.sources.tables import load_table
+from dist_mapreduce_spark.sources.tables import (
+    load_table,
+    read_parquet,
+    stat_digest,
+)
 
 from dist_mapreduce_spark.scratch import scratch_root
 
@@ -110,23 +114,10 @@ _BUILT_THIS_SESSION: dict[str, str] = {}
 
 
 def _corpus_fingerprint(sf_dir: str) -> str:
-    """Cheap identity of the embeddings source: (path, size, mtime_ns)
-    of every file under it — an os.stat sweep, no data read. This is
-    the same freshness signal a table format's snapshot id provides at
-    scale; mtime granularity is ns so even an immediate in-place
-    rewrite changes the key."""
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    h = hashlib.md5()
-    if os.path.isfile(src):
-        st = os.stat(src)
-        h.update(f"{src}:{st.st_size}:{st.st_mtime_ns}".encode())
-    elif os.path.isdir(src):
-        for droot, _, files in sorted(os.walk(src)):
-            for f in sorted(files):
-                p = os.path.join(droot, f)
-                st = os.stat(p)
-                h.update(f"{p}:{st.st_size}:{st.st_mtime_ns}".encode())
-    return h.hexdigest()
+    """Cheap identity of the embeddings source: the stat_digest of
+    every file under it (the same freshness signal read_parquet keys
+    its schema memo on), so an in-place rewrite changes the key."""
+    return stat_digest([os.path.join(sf_dir, "embeddings.parquet")])
 
 
 def build_ivf_index(
@@ -197,7 +188,7 @@ def q_sim_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cell bigint, n_vecs bigint, id_sum bigint, min_id bigint,"
             " max_id bigint, dim_sum bigint",
         )
-    back = spark.read.parquet(path)
+    back = read_parquet(spark, path)
     return (
         back.groupBy(F.col("cell").cast("long").alias("cell"))
         .agg(
@@ -307,7 +298,7 @@ def serve_batched_from_index(
         # Empty query batch (no vec_id < n_queries, or all query
         # embeddings NULL): same empty frame as the batch twin.
         return empty
-    scan = spark.read.parquet(path).filter(F.col("cell").isin(union_cells))
+    scan = read_parquet(spark, path).filter(F.col("cell").isin(union_cells))
     scored = (
         scan.join(
             F.broadcast(probes),
@@ -417,7 +408,7 @@ def _filtered_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not union_cells:
         return empty
     scan = (
-        spark.read.parquet(path)
+        read_parquet(spark, path)
         .filter(F.col("cell").isin(union_cells))
         .filter(F.col("label") == FILTER_LABEL)
     )
@@ -902,7 +893,7 @@ def q_sim_ivf_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
         .partitionBy("cell")
         .parquet(path)
     )
-    back = spark.read.parquet(path)
+    back = read_parquet(spark, path)
 
     q_ids = sorted(
         int(r["vec_id"])
@@ -944,7 +935,7 @@ def q_sim_ivf_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
         int(r["pcell"]) for r in probes.select("pcell").distinct().collect()
     )
     if union_cells:
-        scan = spark.read.parquet(path).filter(F.col("cell").isin(union_cells))
+        scan = read_parquet(spark, path).filter(F.col("cell").isin(union_cells))
         cand = (
             scan.join(
                 F.broadcast(probes),
@@ -1057,7 +1048,7 @@ def q_sim_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     base.write.mode("overwrite").partitionBy("cell").parquet(path)
     batch = ivf_cells_df(spark, emb.filter(is_new), cent_rows)
     batch.write.mode("append").partitionBy("cell").parquet(path)
-    back = spark.read.parquet(path)
+    back = read_parquet(spark, path)
     return (
         back.groupBy(F.col("cell").cast("long").alias("cell"))
         .agg(
@@ -1173,7 +1164,7 @@ def q_sim_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     if del_cells:
         stage = _index_dir("ivf_index_del_stage", sf_dir)
         shutil.rmtree(stage, ignore_errors=True)
-        affected = spark.read.parquet(index_data_dir(path)).filter(
+        affected = read_parquet(spark, index_data_dir(path)).filter(
             F.col("cell").isin(del_cells)
         )
         survivors = affected.join(F.broadcast(tomb), "vec_id", "left_anti")
@@ -1182,7 +1173,7 @@ def q_sim_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         # rewritten ones in (absent in staging == cell emptied by the
         # delete), flip the manifest LAST — old-or-new, never a mix.
         commit_cell_swap(path, stage, del_cells)
-    back = spark.read.parquet(index_data_dir(path))
+    back = read_parquet(spark, index_data_dir(path))
     return (
         back.groupBy(F.col("cell").cast("long").alias("cell"))
         .agg(
@@ -1296,7 +1287,7 @@ def q_sim_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         stage = _index_dir("ivf_index_ups_stage", sf_dir)
         shutil.rmtree(stage, ignore_errors=True)
         tomb = new_batch.select("vec_id")
-        affected = spark.read.parquet(index_data_dir(path)).filter(
+        affected = read_parquet(spark, index_data_dir(path)).filter(
             F.col("cell").isin(ups_cells)
         )
         survivors = affected.join(F.broadcast(tomb), "vec_id", "left_anti")
@@ -1305,7 +1296,7 @@ def q_sim_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         merged.write.mode("overwrite").partitionBy("cell").parquet(stage)
         commit_cell_swap(path, stage, ups_cells)
-    back = spark.read.parquet(index_data_dir(path))
+    back = read_parquet(spark, index_data_dir(path))
     return (
         back.groupBy(F.col("cell").cast("long").alias("cell"))
         .agg(
@@ -1704,7 +1695,7 @@ def q_sim_index_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cell bigint, n_vecs bigint, id_sum bigint, min_id bigint,"
             " max_id bigint, dim_sum bigint",
         )
-    back = spark.read.parquet(index_data_dir(path))
+    back = read_parquet(spark, index_data_dir(path))
     return (
         back.groupBy(F.col("cell").cast("long").alias("cell"))
         .agg(
@@ -1767,7 +1758,7 @@ def q_sim_serve_retrained(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     if not union_cells:
         return empty
-    scan = spark.read.parquet(index_data_dir(path)).filter(
+    scan = read_parquet(spark, index_data_dir(path)).filter(
         F.col("cell").isin(union_cells)
     )
     sc = (
@@ -1927,7 +1918,7 @@ def compact_index_cells(
         return frag
     stage = path + "_compact_stage"
     shutil.rmtree(stage, ignore_errors=True)
-    affected = spark.read.parquet(data).filter(F.col("cell").isin(frag))
+    affected = read_parquet(spark, data).filter(F.col("cell").isin(frag))
     (
         affected.repartition(len(frag), "cell")
         .write.mode("overwrite")
@@ -2011,7 +2002,7 @@ def q_sim_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         cells_all.unpersist()
     compact_index_cells(spark, path)
-    back = spark.read.parquet(index_data_dir(path))
+    back = read_parquet(spark, index_data_dir(path))
     return (
         back.groupBy(F.col("cell").cast("long").alias("cell"))
         .agg(
@@ -2198,7 +2189,7 @@ def q_stream_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         capture_stream_plan(q, "stream_index_append")
     finally:
         q.stop()
-    back = spark.read.parquet(path)
+    back = read_parquet(spark, path)
     return (
         back.groupBy(F.col("cell").cast("long").alias("cell"))
         .agg(
@@ -2550,7 +2541,7 @@ def q_sim_index_build_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(
             [], "cell bigint, n_vecs bigint, id_sum bigint, code_sum bigint"
         )
-    back = spark.read.parquet(path)
+    back = read_parquet(spark, path)
     code_val = " + ".join(
         f"CAST(element_at(codes, {m + 1}) AS BIGINT) * {16 ** m}"
         for m in range(PQ_M)
@@ -2623,7 +2614,7 @@ def q_sim_topk_ivfpq_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
         "query_id long, m int, cid int, pdot double",
     )
-    scan = spark.read.parquet(path).filter(F.col("cell").isin(union_cells))
+    scan = read_parquet(spark, path).filter(F.col("cell").isin(union_cells))
     adc_terms = " + ".join(
         f"sum(CASE WHEN m = {m} THEN pdot END)" for m in range(PQ_M)
     )
@@ -2649,7 +2640,7 @@ def q_sim_topk_ivfpq_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Rerank vectors come from the SAME pruned directories (candidates
     # are inside probed cells by construction).
-    vecs = spark.read.parquet(path).filter(
+    vecs = read_parquet(spark, path).filter(
         F.col("cell").isin(union_cells)
     ).select("vec_id", "embedding")
     reranked = (
@@ -2729,7 +2720,7 @@ def q_stream_serve_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         if not cells:
             return
-        scan = spark.read.parquet(path).filter(F.col("cell").isin(cells))
+        scan = read_parquet(spark, path).filter(F.col("cell").isin(cells))
         w = Window.partitionBy("query_id").orderBy(
             F.desc("score"), F.asc("vec_id")
         )
@@ -2780,7 +2771,7 @@ def q_stream_serve_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.stop()
     if not os.path.isdir(out) or not os.listdir(out):
         return empty
-    return spark.read.parquet(out).select(
+    return read_parquet(spark, out).select(
         F.col("query_id").cast("long"),
         F.col("vec_id").cast("long"),
         "score",
@@ -2906,7 +2897,7 @@ def _pred_filtered_candidates(
     if not union_cells:
         return empty
     scan = (
-        spark.read.parquet(path)
+        read_parquet(spark, path)
         .filter(F.col("cell").isin(union_cells))
         .filter(pred)
     )
@@ -3631,7 +3622,7 @@ def q_sim_index_build_res(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(
             [], "cell bigint, n_vecs bigint, id_sum bigint, code_sum bigint"
         )
-    back = spark.read.parquet(path)
+    back = read_parquet(spark, path)
     code_val = " + ".join(
         f"CAST(element_at(codes, {m + 1}) AS BIGINT) * {16 ** m}"
         for m in range(PQ_M)
@@ -3709,7 +3700,7 @@ def q_sim_topk_ivfpq_res_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
         "query_id long, m int, cid int, pdot double",
     )
-    scan = spark.read.parquet(path).filter(F.col("cell").isin(union_cells))
+    scan = read_parquet(spark, path).filter(F.col("cell").isin(union_cells))
     adc_terms = " + ".join(
         f"sum(CASE WHEN m = {m} THEN pdot END)" for m in range(PQ_M)
     )
@@ -3737,7 +3728,7 @@ def q_sim_topk_ivfpq_res_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     qdf = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
     )
-    vecs = spark.read.parquet(path).filter(
+    vecs = read_parquet(spark, path).filter(
         F.col("cell").isin(union_cells)
     ).select("vec_id", "embedding")
     reranked = (
@@ -3907,7 +3898,7 @@ def q_sim_index_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     if del_cells:
         stage = _index_dir("ivf_index_pin_stage", sf_dir)
         shutil.rmtree(stage, ignore_errors=True)
-        affected = spark.read.parquet(index_data_dir(path)).filter(
+        affected = read_parquet(spark, index_data_dir(path)).filter(
             F.col("cell").isin(del_cells)
         )
         survivors = affected.join(
@@ -3921,7 +3912,7 @@ def q_sim_index_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     # reassignment compute needed — the content is already cell-
     # assigned) — the pinned gen-1 is now beyond the blind
     # one-cycle grace; only the pin protects it.
-    write_index_base(spark.read.parquet(index_data_dir(path)), path)
+    write_index_base(read_parquet(spark, index_data_dir(path)), path)
     return _cell_audit(snap.read(spark))
 
 

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dist_mapreduce_spark.plans.registry import query
-from dist_mapreduce_spark.sources.tables import load_table
+from dist_mapreduce_spark.sources.tables import load_table, read_parquet
 
 from dist_mapreduce_spark.scratch import scratch_root
 
@@ -129,7 +129,7 @@ def q_sink_parquet_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
         .partitionBy("o_orderstatus")
         .parquet(path)
     )
-    back = spark.read.parquet(path).filter(F.col("o_orderstatus") == "F")
+    back = read_parquet(spark, path).filter(F.col("o_orderstatus") == "F")
     return _agg_orders(back)
 
 
@@ -189,7 +189,7 @@ def q_sink_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.mode("overwrite")
         .parquet(path)
     )
-    back = spark.read.parquet(path).filter(
+    back = read_parquet(spark, path).filter(
         F.col("l_partkey").between(100, 400) & F.col("l_suppkey").between(10, 40)
     )
     return back.agg(
@@ -302,10 +302,10 @@ def q_sink_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxRecordsPerFile", per_file)
         .parquet(frag_path)
     )
-    spark.read.parquet(frag_path).repartition(4).write.mode(
+    read_parquet(spark, frag_path).repartition(4).write.mode(
         "overwrite"
     ).parquet(compact_path)
-    back = spark.read.parquet(compact_path)
+    back = read_parquet(spark, compact_path)
     return back.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("n_orders"),
         F.sum("o_totalprice").cast("double").alias("total"),

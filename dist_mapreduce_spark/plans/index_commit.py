@@ -540,6 +540,7 @@ def _read_from_man(spark, root: str, man, data_dir: str, cells=None):
     __part_* discovery columns dropped in file_manifest mode, the
     generation directory with a hive cell filter otherwise."""
     from pyspark.sql import functions as F
+    from dist_mapreduce_spark.sources.tables import read_parquet
 
     if man and man.get("mode") == "file_manifest":
         files = _files_from_man(root, man, cells)
@@ -557,7 +558,7 @@ def _read_from_man(spark, root: str, man, data_dir: str, cells=None):
         # data column in file_manifest layouts) — round-14 advice.
         mirrors = [c for c in df.columns if c.startswith(_PART_PREFIX)]
         return df.drop(*mirrors) if mirrors else df
-    df = spark.read.parquet(data_dir)
+    df = read_parquet(spark, data_dir)
     if cells is not None:
         df = df.filter(F.col("cell").isin([int(c) for c in cells]))
     return df
@@ -941,6 +942,7 @@ class IndexSnapshot:
         the read is the same explicit-file merge the live reader
         uses."""
         from pyspark.sql import functions as F
+        from dist_mapreduce_spark.sources.tables import read_parquet
 
         if self._runs is None:
             raise ValueError(
@@ -955,7 +957,7 @@ class IndexSnapshot:
                 parts.append(_read_runs(spark, self.root, carried))
             if dir_ids:
                 parts.append(
-                    spark.read.parquet(self.data_dir).filter(
+                    read_parquet(spark, self.data_dir).filter(
                         F.col("ingest_batch").isin(
                             [int(b) for b in dir_ids]
                         )
@@ -970,7 +972,7 @@ class IndexSnapshot:
             for p in parts[1:]:
                 out = out.unionByName(p)
             return out
-        df = spark.read.parquet(self.data_dir)
+        df = read_parquet(spark, self.data_dir)
         return df.filter(
             F.col("ingest_batch").isin([int(b) for b in self._runs])
         )
@@ -1489,6 +1491,7 @@ def lsm_read(spark, root: str):
     run set with the NEW watermark, silently dropping every
     just-folded run from the view."""
     from pyspark.sql import functions as F
+    from dist_mapreduce_spark.sources.tables import read_parquet
 
     man = read_manifest(root) or {}
     ft = man.get("folded_through")
@@ -1499,9 +1502,7 @@ def lsm_read(spark, root: str):
             if _run_is_live(b, ft)
         }
         return _read_runs(spark, root, live)
-    df = spark.read.parquet(
-        _manifest_data_dir(root, man if man else None)
-    )
+    df = read_parquet(spark, _manifest_data_dir(root, man if man else None))
     if ft is not None:
         df = df.filter(
             (F.col("ingest_batch") == LSM_BASE_BATCH)

@@ -46,7 +46,7 @@ from dist_mapreduce_spark.plans.similarity import (
     ivf_cent_rows,
     ivf_ranked_cells_sql,
 )
-from dist_mapreduce_spark.sources.tables import load_table
+from dist_mapreduce_spark.sources.tables import load_table, read_parquet
 
 KNN_K = 5          # neighbors kept per vector
 KNN_RESIDENCY = 2  # cells each vector is blocked into (crk <= 2)
@@ -1944,7 +1944,7 @@ def graph_seed_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
         int(r["pcell"]) for r in qp.select("pcell").distinct().collect()
     )
     members = (
-        spark.read.parquet(ivf_path)
+        read_parquet(spark, ivf_path)
         .filter(F.col("cell").isin(pcells))
         .select("vec_id", F.col("embedding").alias("sv"), "cell")
     )
@@ -2018,7 +2018,7 @@ def q_sim_topk_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not ivf_cent_rows(emb):
         return empty
     path = stored_knn_graph(spark, sf_dir)
-    g = spark.read.parquet(index_data_dir(path)).select("src_id", "dst_id")
+    g = read_parquet(spark, index_data_dir(path)).select("src_id", "dst_id")
     und = (
         g.union(
             g.select(

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from dist_mapreduce_spark.operators import text_analysis as ta
 from dist_mapreduce_spark.plans.registry import query
-from dist_mapreduce_spark.sources.tables import load_table
+from dist_mapreduce_spark.sources.tables import load_table, read_parquet
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -517,8 +517,8 @@ def minhash_pairs(spark: SparkSession, docs: DataFrame) -> DataFrame:
         .select(
             "doc_id",
             F.expr(
-                "transform(sh, s ->"
-                " cast(conv(substr(md5(s), 1, 12), 16, 10) as bigint))"
+                "array_distinct(transform(sh, s ->"
+                " cast(conv(substr(md5(s), 1, 12), 16, 10) as bigint)))"
             ).alias("harr"),
         )
     ).cache().filter(F.size("harr") > 0)
@@ -610,13 +610,10 @@ def minhash_pairs(spark: SparkSession, docs: DataFrame) -> DataFrame:
     # keyed on h + two more joins to attach set sizes. The candidate
     # frame is bounded by banding + the bucket cap, so AQE broadcasts
     # it and the verify stage never shuffles the shingle arrays at all.
-    # Value-identical: harr's entries are distinct per doc (distinct
-    # shingle strings; a within-doc 48-bit hash collision is the only
-    # way to a duplicate, and the round-15 exploded path already relied
-    # on its absence — WITH a duplicate its multiplicity-counting join
-    # would have failed the oracle's DISTINCT-h semantics, which every
-    # gate SF passes), so size(array_intersect) equals the old
-    # equi-join match count and size(harr) the old per-doc set size.
+    # harr is array_distinct by construction (the shingle strings are
+    # distinct; only a within-doc 48-bit hash collision could repeat an
+    # entry), so size(harr) and size(array_intersect(ha, hb)) count the
+    # same distinct-hash sets the oracle's DISTINCT-h semantics does.
     # A (theoretical) zero-common candidate now scores jaccard 0.0 and
     # is dropped by the same threshold filter that dropped it before
     # (the old inner join simply never emitted it).
@@ -3176,7 +3173,7 @@ def _dedup_incr_verdicts(
     """Verdict assembly over the staged batch + the two narrow
     fp-indexes — identical for the freshly-drained and the compacted
     run store (that identity IS lsm_compact_dedup's proof)."""
-    batch = spark.read.parquet(stage)
+    batch = read_parquet(spark, stage)
     return (
         batch.join(idx, "fp", "left")
         .join(in_batch, "fp")
@@ -3452,7 +3449,7 @@ def _lsm_maintain_impl(
     )
     arrivals = fp.filter(F.col("is_new")).select("doc_id", "fp")
     arrivals.write.mode("overwrite").parquet(stage)
-    staged = spark.read.parquet(stage)
+    staged = read_parquet(spark, stage)
     for b in range(LSM_MAINT_SPLIT):
         lsm_write_run(
             staged.filter(F.col("doc_id") % LSM_MAINT_SPLIT == b)

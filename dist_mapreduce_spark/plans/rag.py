@@ -27,7 +27,11 @@ from dist_mapreduce_spark.functions.vectors import (
 )
 from dist_mapreduce_spark.operators import text_analysis as ta
 from dist_mapreduce_spark.plans.registry import query
-from dist_mapreduce_spark.sources.tables import load_table
+from dist_mapreduce_spark.sources.tables import (
+    load_table,
+    read_parquet,
+    stat_digest,
+)
 
 # ------------------------------------------------------------ chunking
 
@@ -837,21 +841,7 @@ _DENSE_BUILT: dict[str, str] = {}
 
 
 def _docs_fingerprint(sf_dir: str) -> str:
-    import hashlib
-    import os
-
-    src = os.path.join(sf_dir, "documents.parquet")
-    h = hashlib.md5()
-    if os.path.isfile(src):
-        st = os.stat(src)
-        h.update(f"{src}:{st.st_size}:{st.st_mtime_ns}".encode())
-    elif os.path.isdir(src):
-        for droot, _, files in sorted(os.walk(src)):
-            for f in sorted(files):
-                p = os.path.join(droot, f)
-                st = os.stat(p)
-                h.update(f"{p}:{st.st_size}:{st.st_mtime_ns}".encode())
-    return h.hexdigest()
+    return stat_digest([f"{sf_dir}/documents.parquet"])
 
 
 def _dense_chunk_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1033,7 +1023,7 @@ def _serve_dense_pruned(
     )
     if not union_cells:
         return empty
-    scan = spark.read.parquet(path).filter(F.col("cell").isin(union_cells))
+    scan = read_parquet(spark, path).filter(F.col("cell").isin(union_cells))
     sc = (
         scan.join(
             F.broadcast(probes),
@@ -1168,7 +1158,7 @@ def q_dense_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     from dist_mapreduce_spark.plans.index_commit import index_data_dir
 
-    back = spark.read.parquet(index_data_dir(path))
+    back = read_parquet(spark, index_data_dir(path))
     return (
         back.groupBy(F.col("cell").cast("long").alias("cell"))
         .agg(
@@ -1226,7 +1216,7 @@ def q_dense_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dist_mapreduce_spark.plans.index_commit import index_data_dir
 
     compact_index_cells(spark, path)
-    back = spark.read.parquet(index_data_dir(path))
+    back = read_parquet(spark, index_data_dir(path))
     return (
         back.groupBy(F.col("cell").cast("long").alias("cell"))
         .agg(
@@ -1436,7 +1426,7 @@ def q_dense_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     if del_cells:
         stage = _index_dir("dense_index_del_stage", sf_dir)
         shutil.rmtree(stage, ignore_errors=True)
-        affected = spark.read.parquet(index_data_dir(path)).filter(
+        affected = read_parquet(spark, index_data_dir(path)).filter(
             F.col("cell").isin(del_cells)
         )
         survivors = affected.filter(~F.expr(_DENSE_DEL_DOC_PRED))
@@ -1444,7 +1434,7 @@ def q_dense_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Atomic publish: ONE manifest flip (round-13) — a crash
         # between cell swaps leaves the pre-delete generation current.
         commit_cell_swap(path, stage, del_cells)
-    return _dense_cell_stats(spark.read.parquet(index_data_dir(path)))
+    return _dense_cell_stats(read_parquet(spark, index_data_dir(path)))
 
 
 @query(
@@ -1525,7 +1515,7 @@ def q_dense_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     if ups_cells:
         stage = _index_dir("dense_index_ups_stage", sf_dir)
         shutil.rmtree(stage, ignore_errors=True)
-        affected = spark.read.parquet(index_data_dir(path)).filter(
+        affected = read_parquet(spark, index_data_dir(path)).filter(
             F.col("cell").isin(ups_cells)
         )
         merged = affected.filter(~F.expr(_DENSE_UPS_DOC_PRED)).unionByName(
@@ -1536,7 +1526,7 @@ def q_dense_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         merged.write.mode("overwrite").partitionBy("cell").parquet(stage)
         # Atomic publish: ONE manifest flip (round-13).
         commit_cell_swap(path, stage, ups_cells)
-    return _dense_cell_stats(spark.read.parquet(index_data_dir(path)))
+    return _dense_cell_stats(read_parquet(spark, index_data_dir(path)))
 
 
 # ----- dense-index staleness monitor + retrain (round 12, item #3)
@@ -1816,7 +1806,7 @@ def q_dense_index_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
     path, cent_fresh, _n2 = build_dense_retrained_index(spark, sf_dir)
     if not cent_fresh:
         return spark.createDataFrame([], _DENSE_STATS_SCHEMA)
-    return _dense_cell_stats(spark.read.parquet(index_data_dir(path)))
+    return _dense_cell_stats(read_parquet(spark, index_data_dir(path)))
 
 
 def _dense_maintain_oracle() -> str:
@@ -1962,7 +1952,7 @@ def q_search_dense_maxp_retrained(
         return empty
     from dist_mapreduce_spark.plans.index_commit import index_data_dir
 
-    scan = spark.read.parquet(index_data_dir(path)).filter(
+    scan = read_parquet(spark, index_data_dir(path)).filter(
         F.col("cell").isin(union_cells)
     )
     sc = (
@@ -2266,7 +2256,7 @@ def q_search_dense_mmr_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     if not union_cells:
         return empty
-    scan = spark.read.parquet(path).filter(F.col("cell").isin(union_cells))
+    scan = read_parquet(spark, path).filter(F.col("cell").isin(union_cells))
     sc = (
         scan.join(
             F.broadcast(probes),

@@ -29,7 +29,7 @@ from dist_mapreduce_spark.functions.vectors import (
     norm2_spark_sql,
 )
 from dist_mapreduce_spark.plans.registry import query
-from dist_mapreduce_spark.sources.tables import load_table
+from dist_mapreduce_spark.sources.tables import load_table, stat_digest
 
 N_QUERIES = 5        # query set: vec_id < 5
 TOP_K = 10
@@ -1064,26 +1064,11 @@ _TRAINED_MEMO: dict = {}
 
 
 def _frame_fingerprint(emb: DataFrame) -> tuple:
-    import hashlib as _hl
-    import os as _os
-
-    h = _hl.md5()
-    for f in sorted(emb.inputFiles()):
-        p = f
-        for pre in ("file://", "file:"):
-            if p.startswith(pre):
-                p = p[len(pre):]
-                break
-        try:
-            st = _os.stat(p)
-            h.update(f"{p}:{st.st_size}:{st.st_mtime_ns}".encode())
-        except OSError:
-            h.update(p.encode())
     try:
         sh = emb.semanticHash()
     except Exception:
         sh = None
-    return (sh, h.hexdigest())
+    return (sh, stat_digest(emb.inputFiles()))
 
 
 def trained_quantizer(

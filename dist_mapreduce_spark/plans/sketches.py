@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dist_mapreduce_spark.plans.registry import query
-from dist_mapreduce_spark.sources.tables import load_table
+from dist_mapreduce_spark.sources.tables import load_table, read_parquet
 
 # ------------------------------------------------------------ Count-Min
 
@@ -496,7 +496,7 @@ def _hll_verdicts(
         .alias("v_zero"),
     ).withColumn("k", F.lit(1))
     ex = (
-        spark.read.parquet(stage)
+        read_parquet(spark, stage)
         .agg(F.countDistinct("user_id").cast("long").alias("exact_users"))
         .withColumn("k", F.lit(1))
     )
@@ -746,7 +746,7 @@ def _cms_verdicts(
     freshly-drained and the compacted run store (that identity IS
     lsm_compact_cms's proof)."""
     ds = spark.range(CMS_D).select(F.col("id").cast("int").alias("d"))
-    staged = spark.read.parquet(stage)
+    staged = read_parquet(spark, stage)
     n = staged.agg(F.count(F.lit(1)).cast("long").alias("n_events"))
     probes = (
         staged.filter(F.col("user_id") < CMS_PROBES)
@@ -980,7 +980,7 @@ def q_lsm_maintain_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("user_id")
     )
     ev.write.mode("overwrite").parquet(stage)
-    staged = spark.read.parquet(stage)
+    staged = read_parquet(spark, stage)
     ds = spark.range(CMS_D).select(F.col("id").cast("int").alias("d"))
     for b in range(CMS_MAINT_SPLIT):
         lsm_write_run(
@@ -1069,7 +1069,7 @@ def q_lsm_maintain_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("user_id")
     )
     ev.write.mode("overwrite").parquet(stage)
-    staged = spark.read.parquet(stage)
+    staged = read_parquet(spark, stage)
     for b in range(CMS_MAINT_SPLIT):
         lsm_write_run(
             _hll_reg_maxima(

@@ -75,7 +75,7 @@ from dist_mapreduce_spark.plans.similarity import (
     ivf_probes_df,
     ivf_ranked_cells_sql,
 )
-from dist_mapreduce_spark.sources.tables import load_table
+from dist_mapreduce_spark.sources.tables import load_table, read_parquet
 
 #: Probes into the K=8 trained cells. 3/8 nominal fraction when cells
 #: balance — vs the sampled quantizer's 24-of-≤64 (measured 0.498 at
@@ -185,7 +185,7 @@ def q_sim_index_build_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cell bigint, n_vecs bigint, id_sum bigint, min_id bigint,"
             " max_id bigint, dim_sum bigint",
         )
-    back = spark.read.parquet(path)
+    back = read_parquet(spark, path)
     return back.groupBy(F.col("cell").cast("long").alias("cell")).agg(
         F.count(F.lit(1)).alias("n_vecs"),
         F.expr(
@@ -286,7 +286,7 @@ def q_sim_topk_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
         "query_id",
     )
     union_cells = sorted({c for _, c in probe_pairs})
-    scan = spark.read.parquet(path).filter(F.col("cell").isin(union_cells))
+    scan = read_parquet(spark, path).filter(F.col("cell").isin(union_cells))
     scored = (
         scan.join(
             F.broadcast(probes),
@@ -401,7 +401,7 @@ def q_sim_cand_stats_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     ]
     tcand = (
-        spark.read.parquet(path)
+        read_parquet(spark, path)
         .join(
             F.broadcast(
                 spark.createDataFrame(probe_pairs, "query_id bigint, pcell int")

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.tables import normalize_events_ts
+from ..sources.tables import normalize_events_ts, read_parquet
 
 
 #: Per-process log of micro-batch EXECUTED plans from completed
@@ -75,7 +75,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Must work in sessions this repo didn't build (see
     # sources/tables.py): the nanos-as-long conf is runtime-settable.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    batch_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    batch_schema = read_parquet(spark, f"{sf_dir}/events.parquet").schema
     raw = (
         spark.readStream.schema(batch_schema)
         .format("parquet")

@@ -187,3 +187,94 @@ def test_connector_builders_construct(spark):
     )
     s = kafka_sink(stream, "broker:9092", "out", "/tmp/ckpt")
     assert s is not None
+
+
+def _jobs_started(spark, fn):
+    """(fn(), number of Spark jobs fn started): fn runs under a fresh
+    job group, the listener bus is drained, and the group's job ids are
+    counted from statusTracker."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs_started_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_read_parquet_reuses_schema_without_a_job(spark, tmp_path):
+    """The first read of a path infers its schema (a footer-read job);
+    a second read of the unchanged files starts no job at all and
+    returns the same schema and rows."""
+    from dist_mapreduce_spark.sources.tables import read_parquet
+
+    path = str(tmp_path / "t")
+    spark.range(50).selectExpr("id", "id * 2 AS v").write.parquet(path)
+    first, n_first = _jobs_started(spark, lambda: read_parquet(spark, path))
+    again, n_again = _jobs_started(spark, lambda: read_parquet(spark, path))
+    assert n_first >= 1, "the inferring read should start the footer job"
+    assert n_again == 0
+    assert again.schema == first.schema == spark.read.parquet(path).schema
+    assert sorted(again.collect()) == sorted(first.collect())
+
+
+def test_read_parquet_sees_overwrite_with_new_columns(spark, tmp_path):
+    from dist_mapreduce_spark.sources.tables import read_parquet
+
+    path = str(tmp_path / "t")
+    spark.range(3).selectExpr("id AS a").write.parquet(path)
+    assert read_parquet(spark, path).columns == ["a"]
+    spark.range(3).selectExpr("CAST(id AS STRING) AS b", "id AS c").write.mode(
+        "overwrite"
+    ).parquet(path)
+    back = read_parquet(spark, path)
+    assert back.columns == ["b", "c"]
+    assert sorted((r.b, r.c) for r in back.collect()) == [
+        ("0", 0), ("1", 1), ("2", 2),
+    ]
+
+
+def test_read_parquet_refingerprints_added_part_file(spark, tmp_path):
+    """A directory that gains a part file gets a new digest: the next
+    read infers again, replaces the path's one memo entry and reads
+    every row."""
+    from dist_mapreduce_spark.sources import tables as T
+
+    path = str(tmp_path / "t")
+    spark.range(10).write.parquet(path)
+    T.read_parquet(spark, path)
+    d1 = T._SCHEMAS[path][0]
+    spark.range(10, 15).write.mode("append").parquet(path)
+    back, n_jobs = _jobs_started(spark, lambda: T.read_parquet(spark, path))
+    assert n_jobs >= 1
+    assert T._SCHEMAS[path][0] == T.stat_digest([path]) != d1
+    assert back.count() == 15
+
+
+def test_ivf_serving_after_build_does_not_retrain(spark):
+    """The build reads the corpus with an inferred schema, serving with
+    the remembered one: both frames fingerprint alike, so serving hits
+    the trained-quantizer memo instead of training again."""
+    from dist_mapreduce_spark.plans import similarity as S
+    from dist_mapreduce_spark.plans.ann_index import (
+        q_sim_index_build,
+        q_sim_topk_ivf_pruned,
+    )
+    from dist_mapreduce_spark.sources import tables as T
+    from tests.conftest import SF_SMOKE
+
+    emb_path = f"{SF_SMOKE}/embeddings.parquet"
+    T._SCHEMAS.pop(emb_path, None)
+    inferred = T.load_table(spark, SF_SMOKE, "embeddings")
+    remembered = T.load_table(spark, SF_SMOKE, "embeddings")
+    assert S._frame_fingerprint(inferred) == S._frame_fingerprint(remembered)
+
+    T._SCHEMAS.pop(emb_path, None)
+    assert q_sim_index_build(spark, SF_SMOKE).collect()
+    n_memo = len(S._TRAINED_MEMO)
+    assert q_sim_topk_ivf_pruned(spark, SF_SMOKE).collect()
+    assert len(S._TRAINED_MEMO) == n_memo
